@@ -133,17 +133,21 @@ def run_meta_row(spark: SparkSession, app_name: str, num_buckets: int,
     normal; a resume in a different key universe is corruption)."""
     import hashlib
 
-    conf = spark.sparkContext.getConf()
     config_hash = hashlib.md5(
         f"num_buckets={num_buckets}".encode()).hexdigest()[:12]
-    row = [(config_hash, app_name, int(num_buckets), int(num_partitions),
-            int(spark.conf.get("spark.sql.shuffle.partitions", "0")),
-            conf.get("spark.master", ""), _code_version())]
-    return spark.createDataFrame(
-        row, ("config_hash string, app_name string, num_buckets int, "
-              "num_partitions int, shuffle_partitions int, master string, "
-              "code_version string")
-    ).withColumn("created_at", F.current_timestamp())
+    # built JVM-side from literals: a local-data frame would plan a Python
+    # RDD scan and start Python workers to write one row
+    return spark.range(1, numPartitions=1).select(
+        F.lit(config_hash).alias("config_hash"),
+        F.lit(app_name).alias("app_name"),
+        F.lit(int(num_buckets)).cast("int").alias("num_buckets"),
+        F.lit(int(num_partitions)).cast("int").alias("num_partitions"),
+        F.lit(int(spark.conf.get("spark.sql.shuffle.partitions", "0")))
+        .cast("int").alias("shuffle_partitions"),
+        F.lit(spark.sparkContext.master).alias("master"),
+        F.lit(_code_version()).alias("code_version"),
+        F.current_timestamp().alias("created_at"),
+    )
 
 
 def commit_run_meta(spark: SparkSession, checkpoint_path: str,

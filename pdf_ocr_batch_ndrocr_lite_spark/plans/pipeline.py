@@ -9,7 +9,9 @@ Logical plan (all declarative until the single vectorized UDF stage):
                                                     co-locates the giant-doc
                                                     tail — measured 5x worse)
       → ONE mapInPandas extraction stage           (Arrow, no per-row Python)
-      → overwrite-by-partition-key extractions sink (idempotent replay)
+      → rebalance by key → overwrite-by-partition-key extractions sink
+                                                   (one file per key,
+                                                    idempotent replay)
       → per-partition-key lineage rollup → MERGE   (idempotent metrics)
 
 Replaces the reference's sequential per-file loop + CSV log

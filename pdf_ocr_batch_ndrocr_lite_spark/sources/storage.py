@@ -58,11 +58,20 @@ class StorageAdapter:
         REPLACES its previous output instead of appending next to it, so a
         replayed key (crash between output write and lineage commit) cannot
         duplicate rows.  Iceberg: ``overwritePartitions()`` snapshot commit;
-        parquet fallback: dynamic partitionOverwriteMode."""
+        parquet fallback: dynamic partitionOverwriteMode.
+
+        The parquet fallback clusters rows by the partition columns first
+        (a REBALANCE hint — Iceberg's hash write distribution), so each key
+        is written by one task: one file per key instead of one per (task,
+        key) pair.  Rebalance rather than ``repartition(n, *cols)``: AQE
+        coalesces the tiny keys into few tasks and splits an oversized key
+        at the advisory partition size, so no task ever holds a whole
+        run's worth of one key."""
         if self.use_iceberg:
             df.writeTo(path).overwritePartitions()
         else:
-            (df.write.mode("overwrite")
+            (df.hint("rebalance", *partition_cols)
+             .write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy(*partition_cols)
              .parquet(path))

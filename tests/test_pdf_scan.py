@@ -271,6 +271,51 @@ def test_bad_flate_degrades_to_zero_ops():
     assert ps.has_text_layer_raw(pdf) == (False, 1)
 
 
+def _one_stream_doc(body):
+    return _doc(
+        _obj(1, b"<< /Type /Catalog /Pages 2 0 R >>"),
+        _obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+        _obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>"),
+        _stream_obj(4, body, filt=b"/Filter /FlateDecode "),
+    )
+
+
+def test_flate_bomb_is_bounded_parse_warning():
+    """A small document whose Flate stream inflates to 96 MiB (a decode
+    bomb) is a bounded parse warning: the inflate stops at the decoded-size
+    cap instead of materializing the whole stream and scanning it."""
+    import tracemalloc
+    import zlib as z
+    c = z.compressobj(9)
+    zeros = bytes(1 << 20)
+    bomb = b"".join([c.compress(zeros) for _ in range(96)] + [c.flush()])
+    pdf = _one_stream_doc(bomb)
+    assert len(pdf) < (1 << 20)
+    tracemalloc.start()
+    try:
+        assert ps.scan_text_layer(pdf) == (False, 1, 1)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    # the capped inflate buffer plus its joined copy
+    assert peak <= 2 * ps.MAX_FLATE_BYTES + (8 << 20)
+
+
+def test_flate_truncated_and_trailing_bytes():
+    """The bounded inflate keeps zlib.decompress semantics: a truncated
+    stream raises (a page warning), bytes after the end are ignored."""
+    import zlib as z
+    content = b"BT (bounded inflate) Tj ET " * 40
+    packed = z.compress(content)
+    with pytest.raises(z.error):
+        ps._flate_decode(packed[:-8])
+    with pytest.raises(z.error):
+        ps._flate_decode(b"")
+    assert ps._flate_decode(packed + b"\r\n") == content
+    assert ps.scan_text_layer(_one_stream_doc(packed[:-8])) == (False, 1, 1)
+    assert ps.scan_text_layer(_one_stream_doc(packed)) == (True, 1, 0)
+
+
 # --- text-layer extraction ---------------------------------------------------
 
 
@@ -862,6 +907,30 @@ def test_aes_cipher_matches_published_vectors():
     data = b"searchable pdf layer" * 9
     enc = aes.cbc_encrypt(key256, iv, aes.pkcs7_pad(data))
     assert aes.pkcs7_unpad(aes.cbc_decrypt(key256, iv, enc)) == data
+
+
+@pytest.mark.parametrize("key_len", [16, 32])
+def test_cbc_decrypt_matches_block_primitive(key_len):
+    """Seeded differential check of the word-based `cbc_decrypt` against
+    CBC chained by hand over `_decrypt_block`, the inverse-round block
+    primitive kept as its oracle: random keys and IVs, 1-40 blocks, and a
+    ragged tail that `cbc_decrypt` must drop."""
+    import random
+
+    from pdf_ocr_batch_ndrocr_lite_spark.functions import aes
+    rng = random.Random(1000 + key_len)
+    for _ in range(30):
+        key, iv = rng.randbytes(key_len), rng.randbytes(16)
+        n = rng.randint(1, 40)
+        data = rng.randbytes(16 * n + rng.randrange(16))
+        w, nr = aes._expand_key(key)
+        want, prev = b"", iv
+        for i in range(0, 16 * n, 16):
+            block = data[i:i + 16]
+            want += bytes(a ^ b for a, b in
+                          zip(aes._decrypt_block(w, nr, block), prev))
+            prev = block
+        assert aes.cbc_decrypt(key, iv, data) == want
 
 
 @pytest.mark.parametrize("kind,expect_v,expect_r", [

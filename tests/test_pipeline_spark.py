@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -95,6 +97,84 @@ def test_pipeline_with_checkpoint_resume(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_first
 
 
+def _assert_one_file_per_key(out):
+    """Exactly one parquet file in each ``partition_key=k`` directory."""
+    files = {d: sum(f.endswith(".parquet")
+                    for f in os.listdir(os.path.join(out, d)))
+             for d in os.listdir(out) if d.startswith("partition_key=")}
+    assert files and set(files.values()) == {1}, files
+
+
+def _direct_totals(rows):
+    """The run_pipeline counters, aggregated in Python over collected
+    run_extraction rows."""
+    counter = {E.ACTION_EXTRACTED: "extracted",
+               E.ACTION_PARSE_FAILURE: "parse_failures",
+               E.ACTION_SKIP_HAS_TEXT: "skip_has_text",
+               E.ACTION_SKIP_NAME: "skip_name",
+               E.ACTION_NEEDS_OCR: "needs_ocr"}
+    want = {"docs": len(rows),
+            "pages": sum(r["page_count"] or 0 for r in rows),
+            **dict.fromkeys(counter.values(), 0)}
+    for r in rows:
+        want[counter[r["action"]]] += 1
+    return want
+
+
+def test_sink_one_file_per_key_matches_extraction(spark, tmp_path):
+    """Fresh run: the sink is clustered by key (exactly one parquet file
+    per partition_key directory), its rows are exactly the extracted rows
+    of run_extraction over the same input, and the returned totals equal a
+    direct aggregation."""
+    out = str(tmp_path / "extractions")
+    df = corpus_df(spark, 120, seed=SEED, partitions=4)
+    totals = run_pipeline(
+        spark, df, output_path=out, checkpoint_path=str(tmp_path / "ckpt"),
+        storage=StorageAdapter(), num_buckets=16)
+    direct = E.run_extraction(df).collect()
+    assert totals == _direct_totals(direct)
+    _assert_one_file_per_key(out)
+    cols = ["url", "lang", "doc_kind", "extracted_text", "page_count",
+            "token_count", "block_count"]
+    want = sorted(tuple(r[c] for c in cols) for r in direct
+                  if r["action"] == E.ACTION_EXTRACTED)
+    sink = spark.read.parquet(out)
+    got = sorted(tuple(r[c] for c in cols) for r in sink.collect())
+    assert got == want
+    keyed = ck.with_partition_key(sink.drop("partition_key"), 16)
+    assert keyed.exceptAll(sink.select(keyed.columns)).count() == 0
+
+
+def test_totals_fully_resumed_run_all_zero(spark, tmp_path):
+    """A resume with every key done extracts nothing: every counter the
+    run returns is 0, not only ``docs``."""
+    out = str(tmp_path / "extractions")
+    ckpt = str(tmp_path / "checkpoint")
+    df = corpus_df(spark, 40, seed=SEED, partitions=4)
+    run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
+                 storage=StorageAdapter(), num_buckets=8)
+    totals = run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
+                          storage=StorageAdapter(), num_buckets=8)
+    assert totals == _direct_totals([])
+
+
+def test_totals_no_extracted_documents(spark, tmp_path):
+    """Only documents that are not extracted: the sink frame is empty,
+    yet the totals count every document, with and without a sink."""
+    df = corpus_df(spark, 120, seed=SEED, partitions=4)
+    other = [r["url"] for r in E.run_extraction(df).collect()
+             if r["action"] != E.ACTION_EXTRACTED]
+    sub = df.filter(F.col("url").isin(other))
+    direct = _direct_totals(E.run_extraction(sub).collect())
+    assert direct["extracted"] == 0 and direct["docs"] == len(other) > 0
+    out = str(tmp_path / "extractions")
+    totals = run_pipeline(
+        spark, sub, output_path=out, checkpoint_path=str(tmp_path / "ckpt"),
+        storage=StorageAdapter(), num_buckets=8)
+    assert totals == direct
+    assert run_pipeline(spark, sub) == direct
+
+
 def test_replay_after_lost_lineage_no_duplicates(spark, tmp_path):
     """Crash-window semantics: output committed but lineage commit lost
     (simulated by deleting the checkpoint table).  The restart re-extracts
@@ -118,6 +198,7 @@ def test_replay_after_lost_lineage_no_duplicates(spark, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == n_first  # ...but nothing duplicated
     assert final.count() == final.select("url").distinct().count()
+    _assert_one_file_per_key(out)
 
 
 def test_partial_resume_no_duplicates(spark, tmp_path):
@@ -142,6 +223,7 @@ def test_partial_resume_no_duplicates(spark, tmp_path):
 
     final = spark.read.parquet(out)
     assert final.count() == final.select("url").distinct().count()
+    _assert_one_file_per_key(out)
 
 
 def test_image_rows_in_corpus(results):
@@ -207,4 +289,37 @@ def test_run_meta_written_and_continuity_enforced(spark, tmp_path):
         run_pipeline(spark, df, output_path=out, checkpoint_path=ckpt,
                      storage=storage, num_buckets=32)
     # nothing extra was appended by the failed attempt
+    assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
+
+
+def test_run_meta_appends_to_table_of_local_data_rows(spark, tmp_path):
+    """A meta table holding a row written from local Python data (as
+    earlier versions did, through createDataFrame) takes a row from the
+    literal-built `run_meta_row`: same names and types, both rows read
+    back, and the num_buckets continuity guard still reads the table."""
+    import datetime as dt
+    import hashlib
+
+    ckpt = str(tmp_path / "checkpoint")
+    storage = StorageAdapter()
+    old = spark.createDataFrame(
+        [(hashlib.md5(b"num_buckets=16").hexdigest()[:12], "old-run", 16, 4, 8, "local[4]", "0123456789ab",
+          dt.datetime(2026, 1, 1))],
+        "config_hash string, app_name string, num_buckets int, "
+        "num_partitions int, shuffle_partitions int, master string, "
+        "code_version string, created_at timestamp")
+    storage.append(old, ck.meta_path(ckpt))
+    new = ck.run_meta_row(spark, "new-run", 16, 4)
+    assert [(f.name, f.dataType) for f in new.schema] == \
+        [(f.name, f.dataType) for f in old.schema]
+    assert new.columns == ck.RUN_META_COLS
+
+    ck.commit_run_meta(spark, ckpt, storage, "new-run", 16, 4)
+    rows = sorted(spark.read.parquet(ck.meta_path(ckpt)).collect(),
+                  key=lambda r: r["created_at"])
+    assert [r["app_name"] for r in rows] == ["old-run", "new-run"]
+    assert rows[1]["num_buckets"] == 16
+    assert rows[0]["config_hash"] == rows[1]["config_hash"]
+    with pytest.raises(ValueError, match="num_buckets"):
+        ck.commit_run_meta(spark, ckpt, storage, "new-run", 32, 4)
     assert spark.read.parquet(ck.meta_path(ckpt)).count() == 2
